@@ -50,13 +50,6 @@ final case class TrainingSet(
     }
     if (excludeColumns.nonEmpty) joined.drop(excludeColumns: _*) else joined
   }
-
-  /** Feature column names the model will see (everything attached by lookups
-    * plus label-side covariates, minus exclusions and the label itself). */
-  def featureColumns: Seq[String] = {
-    val out = loadDf.columns.toSeq
-    out.filterNot(c => labelColumn.contains(c))
-  }
 }
 
 object TrainingSet {

@@ -1,8 +1,13 @@
 package graft.ml
 
+import scala.collection.concurrent.TrieMap
+
 import org.apache.spark.ml.PipelineModel
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types.StructField
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{MutableProjection, Predicate}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LeafNode, LogicalPlan, Project}
+import org.apache.spark.sql.types.{StructField, StructType}
 import org.json4s.{DefaultFormats, Extraction, Formats, JArray, JNothing, JObject, JValue}
 import org.json4s.JsonDSL._
 import org.json4s.jackson.JsonMethods
@@ -42,19 +47,27 @@ final case class ScoringModel(
     * online inference (model served against the low-latency store,
     * reference README.md:110-116). Features come from the store's
     * broadcast point index ([[graft.fs.FeatureResolver.lookupOne]]) — an
-    * in-memory hash probe after warm-up, no per-call table scan — and the
-    * model transforms a single local row. Missing keys contribute nulls,
-    * exactly scoreBatch's left-join semantics.
+    * in-memory hash probe after warm-up, no per-call table scan. Missing
+    * keys contribute nulls, exactly scoreBatch's left-join semantics, and
+    * the result equals the matching [[scoreBatch]] row.
     *
-    * Deviation, by design: the reference's <10 ms figure is a managed KV
-    * service + model server; here the per-call cost is one local-row Spark
-    * plan (milliseconds-scale, not micro) — the in-scope batch analog,
-    * not a serving replacement. Point-in-time lookups need the full as-of
-    * machinery — use [[scoreBatch]] for those. */
+    * Prepared plan: the first call for a given single-row input schema runs
+    * `model.transform` over an empty placeholder of that schema, takes the
+    * optimized plan and binds each of its nodes once (a Spark planning pass,
+    * ~0.1-0.25 s). Every later call evaluates the bound nodes on one row in the
+    * calling thread — tens of microseconds, no Spark plan and no job. The
+    * pipeline must therefore be row-wise: its optimized plan may hold only
+    * `Project`s and `Filter`s (a filtered-out row returns None). A stage
+    * that aggregates, joins, sorts or reads other data is refused with an
+    * IllegalArgumentException; score such a model with [[scoreBatch]].
+    * Point-in-time lookups need the full as-of machinery — use
+    * [[scoreBatch]] for those too.
+    *
+    * Thread-safe: bound projections are mutable, so each calling thread
+    * binds its own copy of the prepared plan. */
   def scoreOne(store: FeatureResolver, input: Map[String, Any]): Option[Row] = {
     require(lookups.forall(_.timestampLookupKey.isEmpty),
       "scoreOne supports untimed lookups only — point-in-time enrichment needs scoreBatch")
-    val spark = SparkSession.active
     val inputSeq = input.toSeq
     val inputFields = inputSeq.map { case (k, v) =>
       StructField(k, ScoringModel.typeOf(v), nullable = true) }
@@ -69,13 +82,13 @@ final case class ScoringModel(
         rowOpt.map(r => r.get(r.fieldIndex(f))).orNull }
       (fields, values)
     }
-    val schema = org.apache.spark.sql.types.StructType(
-      inputFields ++ featParts.flatMap(_._1))
+    val schema = StructType(inputFields ++ featParts.flatMap(_._1))
     val row = Row.fromSeq(inputSeq.map(_._2) ++ featParts.flatMap(_._2))
-    val df = spark.createDataFrame(
-      java.util.Collections.singletonList(row), schema)
-    model.transform(df).collect().headOption
+    prepared.getOrElseUpdate(schema, ScoringModel.prepare(model, schema))(row)
   }
+
+  /** Prepared single-row scorers, one per input schema (see [[scoreOne]]). */
+  @transient private lazy val prepared = TrieMap.empty[StructType, Row => Option[Row]]
 
   /** Lossless lookup persistence (hint and renames included) with a real
     * JSON writer — names containing quotes/commas survive the round-trip.
@@ -110,7 +123,7 @@ object ScoringModel {
   private[ml] implicit val jsonFormats: Formats = DefaultFormats
 
   /** Runtime Scala value -> Spark type, for assembling scoreOne's
-    * single-row frame from a plain Map (the key/passthrough columns; the
+    * single-row input from a plain Map (the key/passthrough columns; the
     * feature columns take their types from the table schema). */
   private[ml] def typeOf(v: Any): org.apache.spark.sql.types.DataType = {
     import org.apache.spark.sql.types._
@@ -125,13 +138,57 @@ object ScoringModel {
       case _: scala.math.BigDecimal => DecimalType(38, 18)
       case _: java.sql.Timestamp => TimestampType
       case _: java.sql.Date => DateType
+      case _: java.lang.Byte => ByteType
+      case _: String => StringType
       case null => throw new IllegalArgumentException(
         "scoreOne input values must be non-null: a null carries no runtime " +
-          "type, so the single-row frame would get a wrong (string) schema " +
-          "and fail later inside the pipeline with a confusing cast error. " +
+          "type, and a guessed column type would fail later inside the " +
+          "pipeline with a confusing cast error. " +
           "Pass a typed value, or drop the column and let the lookup fill it.")
-      case _ => StringType
+      case other => throw new IllegalArgumentException(
+        s"scoreOne input value $other has unsupported type ${other.getClass.getName}; " +
+          "pass a String, a boxed numeric or Boolean, a BigDecimal, a " +
+          "java.sql.Timestamp or a java.sql.Date")
     }
+  }
+
+  private type Step = InternalRow => Option[InternalRow]
+
+  /** `model` compiled for one single-row input schema: the optimized plan
+    * of `model.transform` over an empty placeholder, as a bottom-up chain of
+    * `Project`/`Filter` steps. The placeholder is a `LogicalRDD`
+    * (`createDataFrame(emptyRDD, schema)`), which the optimizer cannot fold
+    * away the way it folds an empty `LocalRelation`. */
+  private def prepare(model: PipelineModel, inputSchema: StructType): Row => Option[Row] = {
+    val spark = SparkSession.active
+    val placeholder = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], inputSchema)
+    val leafIds = placeholder.queryExecution.analyzed.output.map(_.exprId)
+    val transformed = model.transform(placeholder)
+    def chain(plan: LogicalPlan): List[() => Step] = plan match {
+      case Project(projectList, child) =>
+        (() => {
+          val p = MutableProjection.create(projectList, child.output)
+          p.initialize(0)
+          (r: InternalRow) => Some(p(r))
+        }) :: chain(child)
+      case Filter(condition, child) =>
+        (() => {
+          val p = Predicate.create(condition, child.output)
+          p.initialize(0)
+          (r: InternalRow) => Option.when(p.eval(r))(r)
+        }) :: chain(child)
+      case leaf: LeafNode if leaf.output.map(_.exprId) == leafIds => Nil
+      case other => throw new IllegalArgumentException(
+        "scoreOne needs a row-wise pipeline (Project/Filter plan nodes only), " +
+          s"but the model's plan holds ${other.nodeName}; score this model with scoreBatch")
+    }
+    val binders = chain(transformed.queryExecution.optimizedPlan).reverse
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(inputSchema)
+    val toScala = CatalystTypeConverters.createToScalaConverter(transformed.schema)
+    // Bound projections reuse their output row, so every thread binds its own.
+    val steps = ThreadLocal.withInitial[Seq[Step]](() => binders.map(_()))
+    row => steps.get().foldLeft(Option(toCatalyst(row).asInstanceOf[InternalRow]))(_ flatMap _)
+      .map(toScala(_).asInstanceOf[Row])
   }
 
   private[ml] def hintName(h: LookupHint): String = h match {

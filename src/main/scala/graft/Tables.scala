@@ -1,8 +1,12 @@
 package graft
 
+import scala.collection.concurrent.TrieMap
+
+import org.apache.hadoop.fs.{GlobFilter, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr}
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Loader for the driver-generated parquet star schema
   * (/root/testdata/sf*; see TESTDATA.md / FIXTURES.md §2).
@@ -15,7 +19,72 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    parquet(spark, s"$sfDir/$name.parquet")
+
+  /** Session confs that change what parquet schema inference returns for
+    * the same files; each is part of the [[parquet]] memo key. */
+  private val inferenceConfs = Seq(
+    SQLConf.LEGACY_PARQUET_NANOS_AS_LONG, SQLConf.PARQUET_BINARY_AS_STRING,
+    SQLConf.PARQUET_INT96_AS_TIMESTAMP, SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED,
+    SQLConf.PARQUET_SCHEMA_MERGING_ENABLED)
+
+  /** (path, glob, effective inference confs) → (data-file listing, schema). */
+  private val schemas =
+    TrieMap.empty[(String, Option[String], Seq[String]), (Seq[String], StructType)]
+
+  /** Read the parquet data under `path` (a file or a directory, hive
+    * partition dirs included), keeping only files whose name matches
+    * `glob` when given (Spark's `pathGlobFilter`). Every single-path
+    * parquet read goes through here.
+    *
+    * The schema is a pure function of a table version, so it is inferred
+    * once per (path, glob, inference confs) — a footer-reading Spark job —
+    * and reused, via `.schema(..)`, while the path's data-file listing
+    * (name, length, mtime) is unchanged: the Delta rule of taking the
+    * schema from table metadata rather than from file footers on every
+    * query. Any rewrite changes the listing and re-infers. The rows are
+    * never memoized; every call scans. A missing or empty path falls
+    * through to the plain read and its error. */
+  def parquet(spark: SparkSession, path: String, glob: Option[String] = None): DataFrame = {
+    val reader = glob.fold(spark.read)(g => spark.read.option("pathGlobFilter", g))
+    val files = dataFiles(spark, path, glob)
+    if (files.isEmpty) reader.parquet(path)
+    else {
+      val key = (path, glob, inferenceConfs.map(e => spark.conf.get(e.key, e.defaultValueString)))
+      schemas.get(key) match {
+        case Some((`files`, schema)) => reader.schema(schema).parquet(path)
+        case _ =>
+          val df = reader.parquet(path)
+          schemas.put(key, (files, df.schema))
+          df
+      }
+    }
+  }
+
+  /** Sorted `relative/path:length:mtime` of the data files a read of
+    * `path` scans: `_`/`.` components are skipped as `InMemoryFileIndex`
+    * skips them (`_temporary/`, `_SUCCESS`, `.crc`, sidecars), except
+    * `key=value` partition dirs. Empty when the path does not exist. */
+  private def dataFiles(spark: SparkSession, path: String, glob: Option[String]): Seq[String] = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val filter = glob.map(new GlobFilter(_))
+    def hidden(name: String) =
+      (name.startsWith("_") && !name.contains("=")) || name.startsWith(".")
+    if (!fs.exists(root)) Nil
+    else {
+      val base = fs.makeQualified(root).toUri.getPath.stripSuffix("/")
+      val out = Seq.newBuilder[String]
+      val it = fs.listFiles(root, true)
+      while (it.hasNext) {
+        val f = it.next()
+        val rel = f.getPath.toUri.getPath.stripPrefix(base).stripPrefix("/")
+        if (!rel.split('/').exists(hidden) && filter.forall(_.accept(f.getPath)))
+          out += s"$rel:${f.getLen}:${f.getModificationTime}"
+      }
+      out.result().sorted
+    }
+  }
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = load(s, d, "nation")

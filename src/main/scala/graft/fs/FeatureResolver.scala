@@ -74,7 +74,9 @@ trait FeatureResolver {
 
   /** Point read by PREDICATE PUSHDOWN — the path for tables beyond the
     * [[FeatureResolver.MaxPointLookupRows]] broadcast bound, where
-    * [[lookupOne]] refuses. One filtered scan per call: the PK equality
+    * [[lookupOne]] refuses. One filtered scan, and so one Spark job, per
+    * call: the table's schema comes from [[graft.Tables.parquet]]'s
+    * per-version memo, so no footer-inference job runs. The PK equality
     * reaches the parquet reader (`PushedFilters` in the plan — asserted by
     * FeatureStoreSpec), so row-group min/max stats skip everything but the
     * groups that can hold the key; on a PK-partitioned or PK-sorted layout

@@ -231,7 +231,7 @@ final class FeatureStore(spark: SparkSession, val basePath: String,
     vs.dropRight(maxVersionsRetained).foreach { v =>
       fs.delete(new org.apache.hadoop.fs.Path(versionPath(ft.name, v)), true)
     }
-    val out = ft.copy(schema = spark.read.parquet(ft.path).schema)
+    val out = ft.copy(schema = graft.Tables.parquet(spark, ft.path).schema)
     writeMeta(out)
     registry.put(ft.name, out)
     invalidatePointIndex(ft.name)
@@ -284,7 +284,7 @@ final class FeatureStore(spark: SparkSession, val basePath: String,
     require(versions(name).contains(version),
       s"readTableVersion($name): version $version not retained " +
         s"(have: ${versions(name).mkString(", ")})")
-    spark.read.parquet(versionPath(name, version))
+    graft.Tables.parquet(spark, versionPath(name, version))
   }
 
   /** Restore snapshot `version` as the current table state. The state being
@@ -396,7 +396,7 @@ final class FeatureStore(spark: SparkSession, val basePath: String,
 
   /** Read a registered table (reference: 02_model_training.py:145). */
   override def readTable(name: String): DataFrame =
-    spark.read.parquet(getTable(name).path)
+    graft.Tables.parquet(spark, getTable(name).path)
 
   override def getTable(name: String): FeatureTable =
     registry.getOrElse(name, loadMeta(name).getOrElse(
@@ -453,8 +453,9 @@ final class FeatureStore(spark: SparkSession, val basePath: String,
       // Sidecars from earlier releases lack the key => Nil (unpartitioned).
       val parts = (j \ "partitionColumns").extractOrElse[Seq[String]](Nil)
       // Schema authority is the parquet footer (it reflects what's actually
-      // on disk); the sidecar copy is informational.
-      val schema = spark.read.parquet(tablePath(name)).schema
+      // on disk), inferred once per table version by Tables.parquet; the
+      // sidecar copy is informational.
+      val schema = graft.Tables.parquet(spark, tablePath(name)).schema
       val ft = FeatureTable(name, pks, desc, schema, tablePath(name), parts)
       registry.put(name, ft)
       Some(ft)

@@ -34,7 +34,7 @@ object DataSkipping {
   def fileStats(spark: SparkSession, dir: String, cols: Seq[String]): DataFrame = {
     require(cols.nonEmpty, "need at least one indexed column")
     val aggs = cols.flatMap(c => Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")))
-    spark.read.parquet(dir)
+    graft.Tables.parquet(spark, dir)
       .groupBy(input_file_name().as("file"))
       .agg(aggs.head, aggs.tail: _*)
   }
@@ -139,7 +139,7 @@ object DataSkipping {
       col(c) >= lit(lo) && col(c) <= lit(hi)
     }.reduce(_ && _)
     if (files.isEmpty)
-      spark.read.parquet(dir).filter(lit(false)) // schema-preserving empty
+      graft.Tables.parquet(spark, dir).filter(lit(false)) // schema-preserving empty
     else
       spark.read.parquet(files: _*).filter(residual)
   }

@@ -385,14 +385,6 @@ object Graph {
     } finally edgesW.unpersist(false)
   }
 
-  /** [[weightedPageRankFromPairs]] from raw lineitem (tests, arbitrary
-    * frames). */
-  def coPurchaseWeightedPageRank(lineitem: DataFrame,
-      iterations: Int = PageRankIterations,
-      damping: Double = PageRankDamping,
-      k: Int = PageRankTopK): DataFrame =
-    weightedPageRankFromPairs(pairBase(lineitem), iterations, damping, k)
-
   // -------------------------------------------------------------------
   // q161: personalized PageRank (random walk with restart).
   // -------------------------------------------------------------------
@@ -1361,12 +1353,6 @@ object Graph {
         .as("assortativity"))
   }
 
-  /** [[degreeAssortativityFromPairs]] from raw lineitem. */
-  def coPurchaseAssortativity(lineitem: DataFrame,
-      minSupport: Int = ComponentsMinSupport): DataFrame =
-    degreeAssortativityFromPairs(
-      pairBase(lineitem).filter(col("n_orders") >= minSupport))
-
   /** q159 oracle: identical moment sums (CAST to BIGINT — DuckDB's
     * SUM(BIGINT) is HUGEINT) and the identical one-expression coefficient. */
   def assortativitySql(minSupport: Int = ComponentsMinSupport): String =
@@ -1420,8 +1406,7 @@ object GraphEdges {
   def warm(spark: SparkSession, sfDir: String): String = {
     val fp = graft.ArtifactMemo.tableFingerprint(spark, sfDir, "lineitem")
     memo.getOrBuild(sfDir, fp) { root =>
-      val lineitem = spark.read.option("pathGlobFilter", "lineitem*.parquet")
-        .parquet(sfDir)
+      val lineitem = graft.Tables.parquet(spark, sfDir, Some("lineitem*.parquet"))
       // One self-join, materialized once, feeding every file: pairs is the
       // expensive relation (the basket self-join), nodes a cheap distinct.
       Graph.pairBase(lineitem).write.mode("overwrite").parquet(s"$root/pairs")
@@ -1439,7 +1424,7 @@ object GraphEdges {
       // The FULL weighted stack is deliberately NOT materialized — no
       // query loads it, and at sf10 it is a ~240M-row write every fresh
       // JVM would pay for nothing; [[wStack]] serves that case lazily.
-      val pairs = spark.read.parquet(s"$root/pairs")
+      val pairs = graft.Tables.parquet(spark, s"$root/pairs")
       Graph.symmetrizedDeg(pairs).write.mode("overwrite")
         .parquet(s"$root/edges_deg")
       val sub = pairs.filter(
@@ -1458,7 +1443,7 @@ object GraphEdges {
     * parts do, and `n_orders` (orders containing both parts) is unchanged
     * by dropping rows of OTHER parts. */
   def pairs(spark: SparkSession, sfDir: String, subgraph: Boolean = false): DataFrame = {
-    val p = spark.read.parquet(s"${warm(spark, sfDir)}/pairs")
+    val p = graft.Tables.parquet(spark, s"${warm(spark, sfDir)}/pairs")
     if (!subgraph) p
     else p.filter(pmod(col("src"), lit(Graph.SubgraphModulus)) === 0 &&
       pmod(col("dst"), lit(Graph.SubgraphModulus)) === 0)
@@ -1466,7 +1451,7 @@ object GraphEdges {
 
   /** The part universe for `sfDir` (optionally subgraph-restricted). */
   def nodes(spark: SparkSession, sfDir: String, subgraph: Boolean = false): DataFrame = {
-    val nd = spark.read.parquet(s"${warm(spark, sfDir)}/nodes")
+    val nd = graft.Tables.parquet(spark, s"${warm(spark, sfDir)}/nodes")
     if (!subgraph) nd
     else nd.filter(pmod(col("part"), lit(Graph.SubgraphModulus)) === 0)
   }
@@ -1477,7 +1462,7 @@ object GraphEdges {
     * restricted edge set; filtering the full stack's rows would keep
     * full-graph degrees, which is wrong), both written by [[warm]]. */
   def degStack(spark: SparkSession, sfDir: String, subgraph: Boolean = false): DataFrame =
-    spark.read.parquet(
+    graft.Tables.parquet(spark,
       s"${warm(spark, sfDir)}/${if (subgraph) "edges_deg_sub" else "edges_deg"}")
 
   /** The weighted stack `(src, dst, w, wsum)`. The subgraph variant is a
@@ -1486,6 +1471,6 @@ object GraphEdges {
     * materializing it at [[warm]] time would be a ~240M-row sf10 write
     * per fresh JVM for nothing. */
   def wStack(spark: SparkSession, sfDir: String, subgraph: Boolean = false): DataFrame =
-    if (subgraph) spark.read.parquet(s"${warm(spark, sfDir)}/edges_w_sub")
+    if (subgraph) graft.Tables.parquet(spark, s"${warm(spark, sfDir)}/edges_w_sub")
     else Graph.symmetrizedW(pairs(spark, sfDir))
 }

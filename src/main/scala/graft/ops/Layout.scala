@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Multi-dimensional data layout (the OPTIMIZE ZORDER analog — Delta's
@@ -23,8 +23,46 @@ import org.apache.spark.sql.functions._
   * arithmetic are codegen'd column expressions, and the rewrite is one
   * `repartitionByRange` shuffle (Spark samples the z-values for balanced
   * output files — skewed data still yields even file sizes).
+  *
+  * The clustered layout is a property of a table VERSION, as in Delta,
+  * where OPTIMIZE ZORDER writes it once per version: [[clusteredCopy]]
+  * persists one z-ordered copy (plus its [[DataSkipping]] manifest) per
+  * (table, clustering) and rebuilds it only when the source's files
+  * change. Queries scan the copy; they never rewrite the table.
   */
 object Layout {
+
+  private val copies = new graft.ArtifactMemo("zorder")
+
+  /** Path of the z-ordered copy of table `table` under `sfDir`, clustered
+    * on `cols` (2-D via [[zorderWrite]], N-D via [[zorderWriteN]]) into
+    * `nFiles` files with `bits` bits per dimension, with a skipping
+    * manifest over `cols`. Built once per source version: an
+    * [[graft.ArtifactMemo]] keyed by all five inputs, stale when
+    * [[graft.ArtifactMemo.tableFingerprint]] of the table's files
+    * changes. A rebuild writes a new generation, so a lazy reader of the
+    * previous copy survives it. The build's jobs carry the description
+    * `zorder:build <table>(<cols>)`; the caller's description is restored
+    * afterwards. */
+  def clusteredCopy(spark: SparkSession, sfDir: String, table: String,
+      cols: Seq[String], nFiles: Int, bits: Int = 4): String = {
+    require(cols.length >= 2, s"clustering needs >= 2 columns, got $cols")
+    val fp = graft.ArtifactMemo.tableFingerprint(spark, sfDir, table)
+    val key = Seq(sfDir, table, cols.mkString(","), nFiles, bits).mkString("|")
+    copies.getOrBuild(key, fp) { path =>
+      val sc = spark.sparkContext
+      val callerDesc = sc.getLocalProperty("spark.job.description")
+      sc.setJobDescription(s"zorder:build $table(${cols.mkString(",")})")
+      try {
+        val src = graft.Tables.load(spark, sfDir, table)
+        cols match {
+          case Seq(x, y) => zorderWrite(src, x, y, path, nFiles, bits)
+          case _ => zorderWriteN(src, cols, path, nFiles, bits)
+        }
+        DataSkipping.writeManifest(spark, path, cols)
+      } finally sc.setJobDescription(callerDesc)
+    }
+  }
 
   /** Morton (Z-order) code of two bucket ids of up to 16 bits each:
     * x occupies even bit positions, y odd. Standard mask-spread bit

@@ -193,7 +193,7 @@ object Similarity {
   /** Load a persisted IVF index. The assignment frame stays disk-backed
     * (partition-pruned probes, no cache warm-up needed). */
   def loadIvf(spark: org.apache.spark.sql.SparkSession, path: String): IvfIndex =
-    IvfIndex(spark.read.parquet(s"$path/assigned"), loadCentroids(spark, path))
+    IvfIndex(graft.Tables.parquet(spark, s"$path/assigned"), loadCentroids(spark, path))
 
   private def loadCentroids(spark: org.apache.spark.sql.SparkSession,
       path: String): Array[(Int, Array[Double])] = {
@@ -394,7 +394,7 @@ object Similarity {
     // filter pushes through the union AND through the anti-join's left
     // side alike).
     val assignedAll = (s"$path/assigned" +: segments("delta_").map(d => s"$d/assigned"))
-      .map(spark.read.parquet(_))
+      .map(graft.Tables.parquet(spark, _))
       .reduce(_ unionByName _)
     val tombs = segments("tomb_").map(t => s"$t/ids")
     val assigned =
@@ -404,7 +404,7 @@ object Similarity {
         // Catalyst broadcasts the anti-join's right side off its file
         // stats; at a scale where tombstones rival the base, compaction
         // is overdue and [[ivfCompactTo]] resets them to zero.
-        val ids = tombs.map(spark.read.parquet(_)).reduce(_ unionByName _).distinct()
+        val ids = tombs.map(graft.Tables.parquet(spark, _)).reduce(_ unionByName _).distinct()
         assignedAll.join(ids, Seq("vec_id"), "left_anti")
       }
     IvfIndex(assigned, loadCentroids(spark, path))
@@ -714,13 +714,13 @@ object Similarity {
     val roots = deltaRoots.getOrElse(Seq(path))
     val encodedAll = (s"$path/encoded" +:
       listSegments(conf, roots, "delta_").map(d => s"$d/encoded"))
-      .map(spark.read.parquet(_))
+      .map(graft.Tables.parquet(spark, _))
       .reduce(_ unionByName _)
     val tombs = listSegments(conf, roots, "tomb_").map(t => s"$t/ids")
     val encoded =
       if (tombs.isEmpty) encodedAll
       else {
-        val ids = tombs.map(spark.read.parquet(_)).reduce(_ unionByName _).distinct()
+        val ids = tombs.map(graft.Tables.parquet(spark, _)).reduce(_ unionByName _).distinct()
         encodedAll.join(ids, Seq("vec_id"), "left_anti")
       }
     (loadPqCodebooks(spark, path), encoded)

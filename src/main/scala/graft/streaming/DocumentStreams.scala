@@ -42,8 +42,8 @@ object DocumentStreams {
     import graft.dedup.Dedup
     val fp = graft.ArtifactMemo.tableFingerprint(spark, sfDir, "documents")
     indexMemo.getOrBuild(sfDir, fp) { ixRoot =>
-      val corpus = spark.read.option("pathGlobFilter", "documents*.parquet")
-        .parquet(sfDir).filter(pmod(col("doc_id"), lit(2)) === 0)
+      val corpus = graft.Tables.parquet(spark, sfDir, Some("documents*.parquet"))
+        .filter(pmod(col("doc_id"), lit(2)) === 0)
       val ix = Dedup.nearDupIndex(corpus, n)
       // The four relations share the shingle stack's lineage; writing
       // them from a localCheckpoint'ed base computes the shingling once
@@ -123,10 +123,10 @@ object DocumentStreams {
     // batch scans the artifact, never the corpus.
     val ixRoot = warmNearDupIndex(spark, sfDir, n)
     val ix = Dedup.NearDupIndex(
-      ss.read.parquet(s"$ixRoot/stop"),
-      ss.read.parquet(s"$ixRoot/shingles"),
-      ss.read.parquet(s"$ixRoot/sizes"),
-      ss.read.parquet(s"$ixRoot/groups"))
+      graft.Tables.parquet(ss, s"$ixRoot/stop"),
+      graft.Tables.parquet(ss, s"$ixRoot/shingles"),
+      graft.Tables.parquet(ss, s"$ixRoot/sizes"),
+      graft.Tables.parquet(ss, s"$ixRoot/groups"))
     val emitRoot = graft.WorkDirs.fresh("neardup_emit")
     // Seed the emissions dir with the TYPED empty screen (single empty
     // part file, schema in the footer): a run whose batches all emit zero
@@ -157,7 +157,7 @@ object DocumentStreams {
       try org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(chk))
       catch { case _: java.io.IOException => () }
     }
-    spark.read.parquet(emitRoot)
+    graft.Tables.parquet(spark, emitRoot)
       .select("doc_id", "matched_doc", "n_common", "jaccard")
       .orderBy("doc_id")
   }

@@ -66,8 +66,7 @@ object EventStreams {
   private[streaming] def eventsStream(ss: SparkSession, sfDir: String,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     ss.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val onDisk = ss.read.option("pathGlobFilter", "events*.parquet")
-      .parquet(sfDir).schema
+    val onDisk = graft.Tables.parquet(ss, sfDir, Some("events*.parquet")).schema
     val reader = ss.readStream
       .schema(onDisk)
       .option("pathGlobFilter", "events*.parquet")
@@ -282,7 +281,7 @@ object EventStreams {
       try org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(chk))
       catch { case _: java.io.IOException => () }
     }
-    spark.read.parquet(out).orderBy("user_id", "session_start")
+    graft.Tables.parquet(spark, out).orderBy("user_id", "session_start")
   }
 
   /** Streaming SCD2 maintenance — [[graft.ops.Relational.scd2Apply]] run
@@ -311,8 +310,7 @@ object EventStreams {
   def scd2MaintainStream(spark: SparkSession, sfDir: String,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     val ss = streamSession(spark)
-    val onDisk = ss.read.option("pathGlobFilter", "orders*.parquet")
-      .parquet(sfDir).schema
+    val onDisk = graft.Tables.parquet(ss, sfDir, Some("orders*.parquet")).schema
     val reader = ss.readStream
       .schema(onDisk)
       .option("pathGlobFilter", "orders*.parquet")
@@ -334,7 +332,7 @@ object EventStreams {
         val s = batch.sparkSession
         val hist = latestGenerationBelow(root, batchId) match {
           case None => graft.ops.Relational.scd2Build(batch.filter(lit(false)))
-          case Some(g) => s.read.parquet(s"$root/g$g")
+          case Some(g) => graft.Tables.parquet(s, s"$root/g$g")
         }
         graft.ops.Relational.scd2Apply(hist, batch.toDF())
           .write.mode("overwrite").parquet(s"$root/g$batchId")
@@ -358,7 +356,7 @@ object EventStreams {
       graft.ops.Relational.scd2Build(spark.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](), onDisk))
     else
-      spark.read.parquet(s"$root/g${lastGen.get()}")
+      graft.Tables.parquet(spark, s"$root/g${lastGen.get()}")
         .orderBy("o_custkey", "version_n")
   }
 
@@ -408,8 +406,7 @@ object EventStreams {
   def scd2EnrichStream(spark: SparkSession, sfDir: String,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     val ss = streamSession(spark)
-    val onDisk = ss.read.option("pathGlobFilter", "orders*.parquet")
-      .parquet(sfDir).schema
+    val onDisk = graft.Tables.parquet(ss, sfDir, Some("orders*.parquet")).schema
     val reader = ss.readStream
       .schema(onDisk)
       .option("pathGlobFilter", "orders*.parquet")
@@ -444,7 +441,7 @@ object EventStreams {
         val s = batch.sparkSession
         val hist = latestGenerationBelow(root, batchId) match {
           case None => graft.ops.Relational.scd2Build(batch.filter(lit(false)))
-          case Some(g) => s.read.parquet(s"$root/g$g")
+          case Some(g) => graft.Tables.parquet(s, s"$root/g$g")
         }
         val next = graft.ops.Relational.scd2Apply(hist, batch.toDF())
         next.write.mode("overwrite").parquet(s"$root/g$batchId")
@@ -458,7 +455,7 @@ object EventStreams {
         // __gen; the settle's last-generation-wins pick is indifferent
         // to duplicates of identical content.
         val keys = batch.select(col("o_custkey").as("user_id")).distinct()
-        val changes = s.read.parquet(s"$root/g$batchId")
+        val changes = graft.Tables.parquet(s, s"$root/g$batchId")
           .join(keys, col("o_custkey") === keys("user_id"), "left_semi")
           .groupBy(col("o_custkey").as("user_id"), col("effective_from"))
           .agg(expr("max_by(o_orderpriority, version_n)").as("o_orderpriority"))
@@ -482,7 +479,7 @@ object EventStreams {
     // over __gen desc settles each fact to its LAST touching batch.
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("event_id")).orderBy(col("__gen").desc)
-    val settled = spark.read.parquet(emitRoot)
+    val settled = graft.Tables.parquet(spark, emitRoot)
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
       .select(col("event_id"), col("priority_at_fact"))

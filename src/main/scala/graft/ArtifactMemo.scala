@@ -89,26 +89,15 @@ final class ArtifactMemo(prefix: String) {
 
 object ArtifactMemo {
 
-  /** Fingerprint of a parquet table's data files under `dir` matching
-    * `namePrefix*` (name, length, mtime — sorted, joined): the staleness
-    * key for any artifact derived from that table. The joined listing IS
-    * the key; hashing it could collide and serve a stale artifact. */
-  def tableFingerprint(spark: org.apache.spark.sql.SparkSession, dir: String,
-      namePrefix: String): String = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) "absent"
-    else {
-      val entries = scala.collection.mutable.ArrayBuffer.empty[String]
-      val it = fs.listFiles(p, true)
-      while (it.hasNext) {
-        val f = it.next()
-        if (f.getPath.getName.endsWith(".parquet") &&
-            (f.getPath.getName.startsWith(namePrefix) ||
-              f.getPath.getParent.getName.startsWith(namePrefix)))
-          entries += s"${f.getPath.getName}:${f.getLen}:${f.getModificationTime}"
-      }
-      entries.sorted.mkString("|")
-    }
+  /** Fingerprint of the parquet data a `Tables.parquet(spark, path, glob)`
+    * read scans — its [[Tables.dataFiles]] listing (relative path, length,
+    * mtime): the staleness key for any artifact derived from that data,
+    * and the same rule the schema memo of [[Tables.parquet]] uses. Pass
+    * the path and glob the build reads. The joined listing IS the key;
+    * hashing it could collide and serve a stale artifact. */
+  def tableFingerprint(spark: org.apache.spark.sql.SparkSession, path: String,
+      glob: Option[String] = None): String = {
+    val files = Tables.dataFiles(spark, path, glob)
+    if (files.isEmpty) "absent" else files.mkString("|")
   }
 }

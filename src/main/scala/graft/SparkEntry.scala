@@ -47,29 +47,12 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     trainingSetAssembly(spark, "/root/testdata/sf0.001")
 
-  /** Fingerprint of the embeddings corpus under `d`: sorted
-    * (name, length, mtime) of every data file. Memoized indexes key on it
-    * so a rewritten corpus at the SAME path invalidates the cache instead
-    * of serving stale probes (round-3 defect). One FS listing per probe —
-    * noise next to the probe itself, and it goes through the Hadoop
-    * FileSystem API so HDFS/S3 paths fingerprint the same way. */
-  private def corpusFingerprint(s: SparkSession, d: String): String = {
-    val path = new org.apache.hadoop.fs.Path(s"$d/embeddings.parquet")
-    val fs = path.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(path)) "absent"
-    else {
-      val entries = scala.collection.mutable.ArrayBuffer.empty[String]
-      val it = fs.listFiles(path, true)
-      while (it.hasNext) {
-        val f = it.next()
-        entries += s"${f.getPath.getName}:${f.getLen}:${f.getModificationTime}"
-      }
-      // The joined listing IS the key (bounded: one short entry per data
-      // file) — a 32-bit hash of it could collide and silently serve a
-      // stale index, the exact defect fingerprinting exists to prevent.
-      entries.sorted.mkString("|")
-    }
-  }
+  /** Fingerprint of the embeddings corpus under `d`. Memoized indexes key
+    * on it so a rewritten corpus at the SAME path invalidates the cache
+    * instead of serving stale probes (round-3 defect). One FS listing per
+    * probe — noise next to the probe itself. */
+  private def corpusFingerprint(s: SparkSession, d: String): String =
+    graft.ArtifactMemo.tableFingerprint(s, s"$d/embeddings.parquet")
 
   /** Session-lifetime IVF index per corpus dir (see q34). Keyed by the
     * building session too: an index holds DataFrames bound to one session,
@@ -122,7 +105,7 @@ object SparkEntry {
     * staleness on the embeddings files). */
   private val ivfAdmitBases = new graft.ArtifactMemo("ivf_admit_base")
   private def ivfAdmitBasePath(s: SparkSession, d: String): String = {
-    val fp = graft.ArtifactMemo.tableFingerprint(s, d, "embeddings")
+    val fp = corpusFingerprint(s, d)
     ivfAdmitBases.getOrBuild(d, fp) { path =>
       val idx = Similarity.buildIvf(
         Tables.embeddings(s, d).filter(pmod(col("vec_id"), lit(10)) =!= 0))
@@ -140,7 +123,7 @@ object SparkEntry {
     * keep it that way (round-11 ask #8 note on ivfAdmitBasePath). */
   private val pqAdmitBases = new graft.ArtifactMemo("pq_admit_base")
   private def pqAdmitBasePath(s: SparkSession, d: String): String = {
-    val fp = graft.ArtifactMemo.tableFingerprint(s, d, "embeddings")
+    val fp = corpusFingerprint(s, d)
     pqAdmitBases.getOrBuild(d, fp) { path =>
       val old = Tables.embeddings(s, d).filter(pmod(col("vec_id"), lit(10)) =!= 0)
       val cb = Similarity.pqTrain(old)
@@ -149,15 +132,22 @@ object SparkEntry {
     }
   }
 
+  private val Z2 = Seq("l_partkey", "l_suppkey")
+
   /** lineitem's persisted copy clustered on (l_partkey, l_suppkey) — the
-    * layout q85 scans and q90 prunes through its manifest. */
+    * layout q85 scans and q90 prunes through the copy's skipping
+    * manifest ([[lineitemZ2Skipping]]). */
   private def lineitemZ2(s: SparkSession, d: String): String =
-    graft.ops.Layout.clusteredCopy(s, d, "lineitem", Seq("l_partkey", "l_suppkey"), 16)
+    graft.ops.Layout.clusteredCopy(s, d, "lineitem", Z2)
+
+  /** [[lineitemZ2]] with its skipping manifest — q90's layout. */
+  private def lineitemZ2Skipping(s: SparkSession, d: String): String =
+    graft.ops.Layout.skippingCopy(s, d, "lineitem", Z2)
 
   /** lineitem's persisted 3-D clustered copy — q103's layout. */
   private def lineitemZ3(s: SparkSession, d: String): String =
     graft.ops.Layout.clusteredCopy(s, d, "lineitem",
-      Seq("l_partkey", "l_suppkey", "l_quantity"), 16)
+      Seq("l_partkey", "l_suppkey", "l_quantity"))
 
   /** Bench hook: ensure the session-lifetime IVF/PQ index memos for `d`
     * are built and cached — called OFF the clock before timing an
@@ -173,7 +163,7 @@ object SparkEntry {
     graft.ops.GraphEdges.warm(s, d)
     ivfAdmitBasePath(s, d)
     pqAdmitBasePath(s, d)
-    lineitemZ2(s, d)
+    lineitemZ2Skipping(s, d)
     lineitemZ3(s, d)
     ()
   }
@@ -641,11 +631,11 @@ object SparkEntry {
       store.readTable("replica").orderBy("c_custkey")
     }),
     // File-level data skipping: q85's persisted z-order copy and its
-    // per-file min/max manifest ([[lineitemZ2]]), files pruned
+    // per-file min/max manifest ([[lineitemZ2Skipping]]), files pruned
     // driver-side BEFORE the scan, residual filter after (pruning admits
     // a superset) — must equal the full scan + filter.
     "q90_skipping_scan" -> ((s, d) => {
-      graft.ops.DataSkipping.prunedRead(s, lineitemZ2(s, d),
+      graft.ops.DataSkipping.prunedRead(s, lineitemZ2Skipping(s, d),
           Map("l_partkey" -> (1L, 60L), "l_suppkey" -> (1L, 3L)))
         .select("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey", "l_quantity")
         .orderBy("l_orderkey", "l_linenumber")

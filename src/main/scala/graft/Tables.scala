@@ -1,7 +1,5 @@
 package graft
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.hadoop.fs.{GlobFilter, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr}
@@ -28,9 +26,23 @@ object Tables {
     SQLConf.PARQUET_INT96_AS_TIMESTAMP, SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED,
     SQLConf.PARQUET_SCHEMA_MERGING_ENABLED)
 
-  /** (path, glob, effective inference confs) → (data-file listing, schema). */
+  private type SchemaKey = (String, Option[String], Seq[String])
+
+  /** Most schema entries kept; past it the least recently read is dropped
+    * (and re-inferred if read again). Version and artifact-generation
+    * paths are never reused once superseded, so without a bound a
+    * long-lived process that keeps rewriting tables would keep one dead
+    * entry per old version. */
+  private val MaxSchemas = 1024
+
+  /** (path, glob, effective inference confs) → (data-file listing,
+    * schema), least recently read first; guarded by its own lock. */
   private val schemas =
-    TrieMap.empty[(String, Option[String], Seq[String]), (Seq[String], StructType)]
+    new java.util.LinkedHashMap[SchemaKey, (Seq[String], StructType)](64, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[SchemaKey, (Seq[String], StructType)]): Boolean =
+        size() > MaxSchemas
+    }
 
   /** Read the parquet data under `path` (a file or a directory, hive
     * partition dirs included), keeping only files whose name matches
@@ -44,28 +56,29 @@ object Tables {
     * schema from table metadata rather than from file footers on every
     * query. Any rewrite changes the listing and re-infers. The rows are
     * never memoized; every call scans. A missing or empty path falls
-    * through to the plain read and its error. */
+    * through to the plain read and its error. At most [[MaxSchemas]] entries are kept, least recently read out
+    * first. */
   def parquet(spark: SparkSession, path: String, glob: Option[String] = None): DataFrame = {
     val reader = glob.fold(spark.read)(g => spark.read.option("pathGlobFilter", g))
     val files = dataFiles(spark, path, glob)
+    val key = (path, glob, inferenceConfs.map(e => spark.conf.get(e.key, e.defaultValueString)))
     if (files.isEmpty) reader.parquet(path)
-    else {
-      val key = (path, glob, inferenceConfs.map(e => spark.conf.get(e.key, e.defaultValueString)))
-      schemas.get(key) match {
-        case Some((`files`, schema)) => reader.schema(schema).parquet(path)
-        case _ =>
-          val df = reader.parquet(path)
-          schemas.put(key, (files, df.schema))
-          df
-      }
+    else schemas.synchronized(Option(schemas.get(key))) match {
+      case Some((`files`, schema)) => reader.schema(schema).parquet(path)
+      case _ =>
+        val df = reader.parquet(path)
+        schemas.synchronized(schemas.put(key, (files, df.schema)))
+        df
     }
   }
 
   /** Sorted `relative/path:length:mtime` of the data files a read of
     * `path` scans: `_`/`.` components are skipped as `InMemoryFileIndex`
     * skips them (`_temporary/`, `_SUCCESS`, `.crc`, sidecars), except
-    * `key=value` partition dirs. Empty when the path does not exist. */
-  private def dataFiles(spark: SparkSession, path: String, glob: Option[String]): Seq[String] = {
+    * `key=value` partition dirs. Empty when the path does not exist. The
+    * one listing-based staleness rule: [[ArtifactMemo.tableFingerprint]]
+    * joins this listing. */
+  private[graft] def dataFiles(spark: SparkSession, path: String, glob: Option[String]): Seq[String] = {
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val filter = glob.map(new GlobFilter(_))

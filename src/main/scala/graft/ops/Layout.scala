@@ -1,5 +1,7 @@
 package graft.ops
 
+import scala.collection.concurrent.TrieMap
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -26,42 +28,77 @@ import org.apache.spark.sql.functions._
   *
   * The clustered layout is a property of a table VERSION, as in Delta,
   * where OPTIMIZE ZORDER writes it once per version: [[clusteredCopy]]
-  * persists one z-ordered copy (plus its [[DataSkipping]] manifest) per
-  * (table, clustering) and rebuilds it only when the source's files
-  * change. Queries scan the copy; they never rewrite the table.
+  * persists one z-ordered copy per (table, clustering columns) and
+  * rebuilds it only when the source's files change; [[skippingCopy]]
+  * adds a [[DataSkipping]] manifest to a copy, once per copy generation,
+  * for the layouts a pruned read uses. Queries scan the copy; they never
+  * rewrite the table.
   */
 object Layout {
 
+  /** Files per clustered copy. */
+  private val CopyFiles = 16
+
   private val copies = new graft.ArtifactMemo("zorder")
+
+  /** Copy key → the newest copy generation whose skipping manifest is
+    * written; at most one entry per key, like `copies`. */
+  private val manifested = TrieMap.empty[String, String]
+
+  private def copyKey(sfDir: String, table: String, cols: Seq[String]): String =
+    Seq(sfDir, table, cols.mkString(",")).mkString("|")
+
+  /** Run `body` with the Spark job description `desc`, then restore the
+    * caller's, so an event log shows which call paid for a build. */
+  private def described[T](spark: SparkSession, desc: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val callerDesc = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(desc)
+    try body finally sc.setJobDescription(callerDesc)
+  }
 
   /** Path of the z-ordered copy of table `table` under `sfDir`, clustered
     * on `cols` (2-D via [[zorderWrite]], N-D via [[zorderWriteN]]) into
-    * `nFiles` files with `bits` bits per dimension, with a skipping
-    * manifest over `cols`. Built once per source version: an
-    * [[graft.ArtifactMemo]] keyed by all five inputs, stale when
+    * 16 files. Built once per source version: an [[graft.ArtifactMemo]]
+    * keyed by (sfDir, table, cols), stale when
     * [[graft.ArtifactMemo.tableFingerprint]] of the table's files
     * changes. A rebuild writes a new generation, so a lazy reader of the
     * previous copy survives it. The build's jobs carry the description
     * `zorder:build <table>(<cols>)`; the caller's description is restored
     * afterwards. */
   def clusteredCopy(spark: SparkSession, sfDir: String, table: String,
-      cols: Seq[String], nFiles: Int, bits: Int = 4): String = {
+      cols: Seq[String]): String = {
     require(cols.length >= 2, s"clustering needs >= 2 columns, got $cols")
-    val fp = graft.ArtifactMemo.tableFingerprint(spark, sfDir, table)
-    val key = Seq(sfDir, table, cols.mkString(","), nFiles, bits).mkString("|")
-    copies.getOrBuild(key, fp) { path =>
-      val sc = spark.sparkContext
-      val callerDesc = sc.getLocalProperty("spark.job.description")
-      sc.setJobDescription(s"zorder:build $table(${cols.mkString(",")})")
-      try {
+    val fp = graft.ArtifactMemo.tableFingerprint(spark, s"$sfDir/$table.parquet")
+    copies.getOrBuild(copyKey(sfDir, table, cols), fp) { path =>
+      described(spark, s"zorder:build $table(${cols.mkString(",")})") {
         val src = graft.Tables.load(spark, sfDir, table)
         cols match {
-          case Seq(x, y) => zorderWrite(src, x, y, path, nFiles, bits)
-          case _ => zorderWriteN(src, cols, path, nFiles, bits)
+          case Seq(x, y) => zorderWrite(src, x, y, path, CopyFiles)
+          case _ => zorderWriteN(src, cols, path, CopyFiles)
         }
-        DataSkipping.writeManifest(spark, path, cols)
-      } finally sc.setJobDescription(callerDesc)
+      }
     }
+  }
+
+  /** [[clusteredCopy]] carrying a [[DataSkipping]] manifest over `cols`,
+    * for [[DataSkipping.prunedRead]]. The manifest is written once per
+    * copy generation (a generation's files never change), under the job
+    * description `zorder:manifest <table>(<cols>)`. It is a sidecar, so
+    * the copy stays the one artifact plain scans of it read too. */
+  def skippingCopy(spark: SparkSession, sfDir: String, table: String,
+      cols: Seq[String]): String = {
+    val key = copyKey(sfDir, table, cols)
+    val path = clusteredCopy(spark, sfDir, table, cols)
+    if (!manifested.get(key).contains(path)) manifested.synchronized {
+      if (!manifested.get(key).contains(path)) {
+        described(spark, s"zorder:manifest $table(${cols.mkString(",")})") {
+          DataSkipping.writeManifest(spark, path, cols)
+        }
+        manifested.put(key, path)
+      }
+    }
+    path
   }
 
   /** Morton (Z-order) code of two bucket ids of up to 16 bits each:

@@ -40,7 +40,7 @@ object DocumentStreams {
     * screens, not the index build the contract amortizes away. */
   def warmNearDupIndex(spark: SparkSession, sfDir: String, n: Int = 3): String = {
     import graft.dedup.Dedup
-    val fp = graft.ArtifactMemo.tableFingerprint(spark, sfDir, "documents")
+    val fp = graft.ArtifactMemo.tableFingerprint(spark, sfDir, Some("documents*.parquet"))
     indexMemo.getOrBuild(sfDir, fp) { ixRoot =>
       val corpus = graft.Tables.parquet(spark, sfDir, Some("documents*.parquet"))
         .filter(pmod(col("doc_id"), lit(2)) === 0)

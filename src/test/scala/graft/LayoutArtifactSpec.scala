@@ -32,16 +32,20 @@ class LayoutArtifactSpec extends SparkSpec {
   private def parentDirs(df: DataFrame): Set[String] =
     df.inputFiles.map(f => new org.apache.hadoop.fs.Path(f).getParent.toString).toSet
 
+  private def hasManifest(copy: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(s"$copy/${DataSkipping.ManifestFile}")
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+  }
+
   test("a memo hit returns the same path and launches no job") {
     val sfDir = tempDir("layout_hit")
     writeLineitem(sfDir, 4000, 0)
-    val built = Layout.clusteredCopy(spark, sfDir, "lineitem", Z3, 4)
-    val (again, jobs) = jobsDuring(Layout.clusteredCopy(spark, sfDir, "lineitem", Z3, 4))
+    val built = Layout.clusteredCopy(spark, sfDir, "lineitem", Z3)
+    val (again, jobs) = jobsDuring(Layout.clusteredCopy(spark, sfDir, "lineitem", Z3))
     assert(again == built)
     assert(jobs.isEmpty, s"memo hit launched ${jobs.size} job(s)")
-    // Another clustering (or file count) is another artifact.
-    assert(Layout.clusteredCopy(spark, sfDir, "lineitem", Z2, 4) != built)
-    assert(Layout.clusteredCopy(spark, sfDir, "lineitem", Z3, 2) != built)
+    // Another clustering is another artifact.
+    assert(Layout.clusteredCopy(spark, sfDir, "lineitem", Z2) != built)
   }
 
   test("the build labels its jobs and restores the caller's description") {
@@ -50,9 +54,9 @@ class LayoutArtifactSpec extends SparkSpec {
     val sc = spark.sparkContext
     sc.setJobDescription("caller")
     try {
-      val (_, jobs) = jobsDuring(Layout.clusteredCopy(spark, sfDir, "lineitem", Z2, 4))
-      assert(jobs.nonEmpty)
-      assert(jobs.forall(_ == "zorder:build lineitem(l_partkey,l_suppkey)"), jobs.distinct)
+      val (_, jobs) = jobsDuring(Layout.skippingCopy(spark, sfDir, "lineitem", Z2))
+      assert(jobs.toSet == Set("zorder:build lineitem(l_partkey,l_suppkey)",
+        "zorder:manifest lineitem(l_partkey,l_suppkey)"), jobs.distinct)
       assert(sc.getLocalProperty("spark.job.description") == "caller")
     } finally sc.setJobDescription(null)
   }
@@ -60,13 +64,16 @@ class LayoutArtifactSpec extends SparkSpec {
   test("a rewritten source builds a new generation; a reader of the old one still counts") {
     val sfDir = tempDir("layout_gen")
     val v1 = writeLineitem(sfDir, 3000, 0)
-    val g1 = Layout.clusteredCopy(spark, sfDir, "lineitem", Z3, 4)
+    val g1 = Layout.skippingCopy(spark, sfDir, "lineitem", Z2)
     assert(rows(Tables.parquet(spark, g1)) == rows(v1))
     val oldReader = Tables.parquet(spark, g1)
     val v2 = writeLineitem(sfDir, 2000, 17)
-    val g2 = Layout.clusteredCopy(spark, sfDir, "lineitem", Z3, 4)
+    val g2 = Layout.skippingCopy(spark, sfDir, "lineitem", Z2)
     assert(g2 != g1, "a rewritten source was served the old copy")
     assert(rows(Tables.parquet(spark, g2)) == rows(v2))
+    // The new generation gets its own manifest, describing its files.
+    assert(DataSkipping.readManifest(spark, g2).count() ==
+      Tables.parquet(spark, g2).inputFiles.length)
     assert(oldReader.count() == 3000)
   }
 
@@ -75,12 +82,15 @@ class LayoutArtifactSpec extends SparkSpec {
     val src = writeLineitem(sfDir, 6000, 3)
     val q85 = SparkEntry.queries("q85_zorder_scan")(spark, sfDir)
     val q90 = SparkEntry.queries("q90_skipping_scan")(spark, sfDir)
-    val copy = Layout.clusteredCopy(spark, sfDir, "lineitem", Z2, 16)
+    val copy = Layout.clusteredCopy(spark, sfDir, "lineitem", Z2)
     val copyDir = new org.apache.hadoop.fs.Path(copy).toUri.getPath
     assert(parentDirs(q85).map(new org.apache.hadoop.fs.Path(_).toUri.getPath) == Set(copyDir))
     assert(parentDirs(q90).map(new org.apache.hadoop.fs.Path(_).toUri.getPath) == Set(copyDir))
     assert(DataSkipping.readManifest(spark, copy).count() ==
       Tables.parquet(spark, copy).inputFiles.length)
+    val (again, jobs) = jobsDuring(Layout.skippingCopy(spark, sfDir, "lineitem", Z2))
+    assert(again == copy)
+    assert(jobs.isEmpty, s"a manifested copy launched ${jobs.size} job(s)")
     val box90 = src.filter(col("l_partkey").between(1, 60) && col("l_suppkey").between(1, 3))
       .select("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey", "l_quantity")
     assert(q90.count() > 0)
@@ -99,5 +109,7 @@ class LayoutArtifactSpec extends SparkSpec {
       .select("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey", "l_quantity")
     assert(want.count() > 0)
     assert(rows(got) == rows(want))
+    // No pruned read uses the 3-D copy, so it carries no manifest.
+    assert(!hasManifest(Layout.clusteredCopy(spark, sfDir, "lineitem", Z3)))
   }
 }
